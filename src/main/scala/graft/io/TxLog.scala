@@ -6,7 +6,7 @@ import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOpti
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** A column's manifest envelope for one segment: [lo, hi] over the
   * column's NON-NULL values, plus whether the parquet footers PROVED the
@@ -37,7 +37,8 @@ case class StrEnv(lo: String, hi: String, noNulls: Boolean)
   * VECTORS in `dvs`: dv dir (a tiny parquet relation of (file, row)
   * positions, relative to the table root like the segments) → the
   * segments it affects. A row listed by any dv is DEAD: every snapshot
-  * read anti-joins the relevant dv positions (merge-on-read). A manifest
+  * read loads the relevant dv positions on the driver and filters them
+  * out of the scan by (file, row index) — merge-on-read. A manifest
   * carrying dvs claims protocol 2 — readers AT OR ABOVE this library
   * version refuse a higher-than-understood protocol loudly instead of
   * resurrecting deleted rows (readers built BEFORE the protocol line
@@ -110,14 +111,14 @@ object PosixLogStore extends LogStore {
     val d = dir(table)
     d.mkdirs()
     val tmp = File.createTempFile(s"claim_", ".tmp", d)
-    Files.write(tmp.toPath, content.getBytes(UTF_8))
+    // the temp file never outlives the call, whatever the link does
     try {
+      Files.write(tmp.toPath, content.getBytes(UTF_8))
       Files.createLink(new File(d, name).toPath, tmp.toPath)
-      tmp.delete()
       true
     } catch {
-      case _: FileAlreadyExistsException => tmp.delete(); false
-    }
+      case _: FileAlreadyExistsException => false
+    } finally { tmp.delete(); () }
   }
 
   def putPointer(table: String, name: String, content: String): Unit = {
@@ -896,42 +897,61 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
     else col(column).cast("double") >= lit(lo) && col(column).cast("double") <= lit(hi)
   }
 
-  /** Relative (table-root) path of each scanned row's parquet FILE plus
-    * its physical position in that file — the coordinate system deletion
-    * vectors address rows by. `_metadata.row_index` is the stable physical
-    * row ordinal the scan exposes; files are immutable, so (file, row)
-    * names a row forever. */
-  private def filePosCols: (Column, Column) =
-    (regexp_extract(col("_metadata.file_path"), "/(data/[^/]+/[^/]+)$", 1),
-      col("_metadata.row_index"))
+  /** `data/<seg>/<file>` of a scanned row's `_metadata.file_path` — the
+    * file key deletion vectors address rows by, next to
+    * `_metadata.row_index` (the stable physical row ordinal the scan
+    * exposes; files are immutable, so (file, row) names a row forever).
+    * Only ever evaluated after the filter or semi-join that picks the
+    * victims, never per scanned row. */
+  private def fileKey(path: Column): Column =
+    regexp_extract(path, DeletionVectors.FileKeyPattern, 1)
 
-  /** Read segments, applying the snapshot's DELETION VECTORS (merge-on-
-    * read): rows whose (file, row) position appears in any dv affecting
-    * one of `segs` are anti-joined away. Dv-less reads are exactly the
-    * plain scan — no metadata columns, no join. Only dvs that affect a
-    * requested segment are read (a partial read pays for its own
-    * tombstones, not the table's). */
-  /** First-file parquet schema signature of one segment dir; "" marks a
-    * file-less dir, null an unreadable footer. A segment is written by ONE
-    * `df.write.parquet`, so its files share a schema — one footer decides.
-    * Segments are IMMUTABLE, so the cache is JVM-wide sound (a vacuumed
-    * segment just stops being referenced; schema metadata is not result
-    * caching — the data is re-read on every action). */
+  /** The raw `_metadata.file_path` column a discovery carries past its
+    * row-reducing operator. */
+  private val PathCol = "__graft_path"
+
+  /** The segments `rows` come from: the DISTINCT [[PathCol]] values (one
+    * per file, not per row) come to the driver and parse there. */
+  private def segmentsOf(rows: DataFrame): Set[String] =
+    rows.select(col(PathCol)).distinct().collect()
+      .map(r => DeletionVectors.segmentOfKey(DeletionVectors.fileKeyOf(r.getString(0)))).toSet
+
   /** One segment's cached footer metadata: the parquet MessageType string
-    * (the uniformity signature) plus the Spark StructType JSON the writer
-    * recorded in the footer's key-value metadata — what lets a uniform
-    * read pass the schema EXPLICITLY and skip the per-read distributed
-    * schema-inference job entirely (Spark runs `mergeSchemasInParallel`
-    * as a cluster job on every schema-less parquet read, even for one
-    * file). Metadata only; the data is re-scanned on every action. */
-  private final case class SegFooterMeta(sig: String, sparkJson: String)
-  private val EmptySegMeta = SegFooterMeta("", null)
+    * with every REQUIRED field relaxed to OPTIONAL (the uniformity
+    * signature — an appended segment written from a non-null column and
+    * its copy-on-write rewrite differ only there), plus the Spark
+    * StructType the writer recorded in the footer's key-value metadata,
+    * made nullable — what lets a uniform read pass the schema EXPLICITLY
+    * and skip the per-read distributed schema-inference job entirely
+    * (Spark runs `mergeSchemasInParallel` as a cluster job on every
+    * schema-less parquet read, even for one file). "" marks a file-less
+    * dir. A segment is written by ONE `df.write.parquet`, so its files
+    * share a schema — one footer decides. Segments are IMMUTABLE, so the
+    * cache is JVM-wide sound (a vacuumed segment just stops being
+    * referenced; schema metadata is not result caching — the data is
+    * re-read on every action). */
+  private final case class SegFooterMeta(sig: String, schema: Option[StructType])
+  private val EmptySegMeta = SegFooterMeta("", None)
 
   private val segSchemaSigCache =
     new java.util.concurrent.ConcurrentHashMap[String, SegFooterMeta]()
 
   private val SparkRowMetaKey = "org.apache.spark.sql.parquet.row.metadata"
 
+  /** `dt` with every field, element and map value nullable: the schema a
+    * parquet scan reports whatever the footers say, so two writers that
+    * differ only in nullability agree on it. */
+  private def nullableOf(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullableOf(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullableOf(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullableOf(m.keyType), nullableOf(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The segment's footer metadata; null for an unreadable footer (not
+    * cached — the caller takes the mergeSchema path). */
   private def segSchemaSig(conf: org.apache.hadoop.conf.Configuration,
       dir: String): SegFooterMeta =
     segSchemaSigCache.computeIfAbsent(dir, d => {
@@ -943,62 +963,74 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
           new org.apache.hadoop.fs.Path(fs.map(_.getAbsolutePath).min),
           org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
           .getFileMetaData
-        SegFooterMeta(fmd.getSchema.toString,
-          fmd.getKeyValueMetaData.get(SparkRowMetaKey)) // null if absent
-      } catch { case _: Exception => null } // null: not cached, merge path
+        // MessageType.toString puts each field on its own line, led by
+        // its repetition
+        SegFooterMeta(fmd.getSchema.toString.replaceAll("(?m)^(\\s*)required ", "$1optional "),
+          Option(fmd.getKeyValueMetaData.get(SparkRowMetaKey))
+            .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+            .collect { case st: StructType => nullableOf(st).asInstanceOf[StructType] })
+      } catch { case _: Exception => null }
     })
 
   /** Segment-dir scan that pays the mergeSchema footer-merge JOB only when
-    * the segments' schemas actually differ (guide §1.2/§6 — a per-read
-    * distributed footer pass on every snapshot read is a fixed cost the
-    * multi-commit lifecycles pay dozens of times): compare one cached
-    * footer signature per segment on the driver; identical → plain read
-    * (schema inferred from a single footer, no job), differing or
-    * unreadable → the mergeSchema read exactly as before. */
+    * the segments' schemas really differ (an added column, a changed
+    * type), not when they differ only in nullability (guide §1.2/§6 — a
+    * per-read distributed footer pass on every snapshot read is a fixed
+    * cost the multi-commit lifecycles pay dozens of times): compare one
+    * cached relaxed footer signature per segment on the driver; equal →
+    * read with the writers' nullable schema passed explicitly (no job), or
+    * inferred from a single footer when a writer recorded none; differing
+    * or unreadable → the mergeSchema read. */
   private def readSegmentDirs(spark: SparkSession, dirs: Seq[String]): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
-    val sigs = dirs.map(segSchemaSig(conf, _))
-    val uniform = !sigs.contains(null) &&
-      sigs.filter(_.sig.nonEmpty).map(_.sig).distinct.lengthCompare(1) <= 0
-    if (uniform) {
-      // EXPLICIT schema from the writer's own footer metadata when every
-      // non-empty segment recorded the same one: no inference job at all.
-      // Any divergence (or a non-Spark-written footer) falls back to the
-      // schema-inferring read — still uniform, still correct.
-      val jsons = sigs.filter(_.sig.nonEmpty).map(_.sparkJson).distinct
-      jsons match {
-        case Seq(j) if j != null =>
-          scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(j))
-            .toOption.collect { case st: org.apache.spark.sql.types.StructType => st }
-            .map(st => spark.read.schema(st).parquet(dirs: _*))
-            .getOrElse(spark.read.parquet(dirs: _*))
-        case _ => spark.read.parquet(dirs: _*)
-      }
+    val metas = dirs.map(segSchemaSig(conf, _))
+    val present = metas.filter(m => m != null && m.sig.nonEmpty)
+    if (metas.contains(null) || present.map(_.sig).distinct.lengthCompare(1) > 0)
+      spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    else present.map(_.schema).distinct match {
+      case Seq(Some(st)) => spark.read.schema(st).parquet(dirs: _*)
+      case _ => spark.read.parquet(dirs: _*)
     }
-    else spark.read.option("mergeSchema", "true").parquet(dirs: _*)
   }
 
+  /** Read segments, applying the snapshot's DELETION VECTORS (merge-on-
+    * read) as a per-file POSITION FILTER: the positions of every dv that
+    * affects one of `segs` load once per call, on the driver
+    * ([[DeletionVectors.load]] — no Spark job, so a frame built only for
+    * its schema costs none), into per-file sorted arrays keyed like the
+    * dv rows (`data/<seg>/<file>`). They are broadcast, and a row survives
+    * iff its (`_metadata.file_path`, `_metadata.row_index`) is not among
+    * them — no join, no per-row path parsing. Only dvs that affect a
+    * requested segment load (a partial read pays for its own tombstones,
+    * not the table's). The driver holds tombstone-sized arrays — the
+    * bound a broadcast join's build side of the same positions would have
+    * — and any rewrite of a segment, [[materializeVectors]] above all,
+    * retires its vectors. Dv-less reads are exactly the plain scan. The
+    * result is the scan or a filter over it, so callers may still select
+    * `_metadata`. */
   private def readSegments(spark: SparkSession, table: String, segs: Seq[String],
-      dvs: Map[String, Map[String, Long]] = Map.empty,
-      segmentCol: Option[String] = None): DataFrame = {
-    val base0 = readSegmentDirs(spark, segs.map(s => s"${dataRoot(table)}/$s"))
-    // segment path projected BEFORE any dv anti-join: input_file_name()
-    // does not resolve over a two-source plan, the scan's _metadata does
-    val base = segmentCol.fold(base0)(c => base0.withColumn(c,
-      regexp_extract(col("_metadata.file_path"), "/(data/[^/]+)/[^/]+$", 1)))
+      dvs: Map[String, Map[String, Long]] = Map.empty): DataFrame = {
+    val base = readSegmentDirs(spark, segs.map(s => s"${dataRoot(table)}/$s"))
     val relevant = dvs.filter(_._2.keys.exists(segs.contains)).keys.toSeq.sorted
     if (relevant.isEmpty) base
     else {
-      val (f, r) = filePosCols
-      val withPos = base.withColumn("__graft_dvf", f).withColumn("__graft_dvr", r)
-      val dv = readSegmentDirs(spark, relevant.map(d => s"${dataRoot(table)}/$d"))
-        .select(col("file").as("__dv_f"), col("row").as("__dv_r"))
-      withPos.join(dv,
-          col("__graft_dvf") === col("__dv_f") && col("__graft_dvr") === col("__dv_r"),
-          "left_anti")
-        .drop("__graft_dvf", "__graft_dvr")
+      val segSet = segs.toSet
+      base.filter(!deadRows(spark, dvPositions(spark, table, relevant)
+        .filter { case (f, _) => segSet(DeletionVectors.segmentOfKey(f)) }))
     }
   }
+
+  /** Per-file sorted dead-row positions of the (table-relative) dv dirs. */
+  private def dvPositions(spark: SparkSession, table: String,
+      dvDirs: Seq[String]): Map[String, Array[Long]] =
+    DeletionVectors.load(spark.sessionState.newHadoopConf(),
+      dvDirs.map(d => s"${dataRoot(table)}/$d"))
+
+  /** True for a scanned row listed in `positions`; the positions ride one
+    * broadcast per call. */
+  private def deadRows(spark: SparkSession, positions: Map[String, Array[Long]]): Column =
+    udf(new DeadRows(spark.sparkContext.broadcast(positions))).withName("graft_dv_dead")(
+      col("_metadata.file_path"), col("_metadata.row_index"))
 
   /** Max columns indexed per segment PER KIND (numeric / string — the
     * Delta dataSkippingNumIndexedCols discipline), max files a DRIVER-side
@@ -1253,11 +1285,6 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
 
   // ---- copy-on-write discovery ---------------------------------------------
 
-  /** Relative segment dir of each scanned row, derived from the file path
-    * ([[writeSegment]] lays files exactly one level under `data/<uuid>`). */
-  private def segmentExpr: Column =
-    regexp_extract(input_file_name(), "/(data/[^/]+)/[^/]+$", 1)
-
   /** Align `df` to `schema` by name: missing columns surface as typed
     * NULLs (the mergeSchema discipline, applied to a partial-segment
     * read so copy-on-write rewrites see the full snapshot schema). */
@@ -1304,14 +1331,12 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
     if (totalRows.exists(_ <=
         spark.sparkContext.defaultParallelism.toLong * CowPrunePassRows)) {
       cowScanCount.addAndGet(segments.size)
-      val scan0 = readSegments(spark, table, segments, base.dvs,
-          segmentCol = Some("__graft_seg"))
-        .select(keyCols.map(col) :+ col("__graft_seg"): _*)
+      val scan0 = readSegments(spark, table, segments, base.dvs)
+        .select(keyCols.map(col) :+ col("_metadata.file_path").as(PathCol): _*)
       val renamed = keyCols.map(k => k -> s"__graft_tk_$k")
       val cond = renamed.map { case (k, a) => col(k) <=> col(a) }.reduce(_ && _)
-      val touched = scan0
-        .join(tk.select(renamed.map { case (k, a) => col(k).as(a) }: _*), cond, "left_semi")
-        .select(col("__graft_seg")).distinct().collect().map(_.getString(0)).toSet
+      val touched = segmentsOf(scan0
+        .join(tk.select(renamed.map { case (k, a) => col(k).as(a) }: _*), cond, "left_semi"))
       return (segments.filter(touched.contains), segments.filterNot(touched.contains))
     }
     // one aggregate over the touch keys: per key column, its NULL count
@@ -1362,9 +1387,8 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
     // dv-APPLIED discovery (parity with deleteResolvedTiers): a segment
     // whose only key-matching rows are already dv-dead holds no LIVE match
     // and must not rewrite — dv-less tables pay nothing here
-    val scan0 = readSegments(spark, table, candidates, base.dvs,
-        segmentCol = Some("__graft_seg"))
-      .select(keyCols.map(col) :+ col("__graft_seg"): _*)
+    val scan0 = readSegments(spark, table, candidates, base.dvs)
+      .select(keyCols.map(col) :+ col("_metadata.file_path").as(PathCol): _*)
     // range prefilter pushed to the scan: the conjunction of every
     // range-able column's [min, max] (each column independently safe —
     // its touch keys carry no NULL, so a NULL-valued base row can never
@@ -1375,9 +1399,8 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
     }
     val renamed = keyCols.map(k => k -> s"__graft_tk_$k")
     val cond = renamed.map { case (k, a) => col(k) <=> col(a) }.reduce(_ && _)
-    val touched = scan
-      .join(tk.select(renamed.map { case (k, a) => col(k).as(a) }: _*), cond, "left_semi")
-      .select(col("__graft_seg")).distinct().collect().map(_.getString(0)).toSet
+    val touched = segmentsOf(scan
+      .join(tk.select(renamed.map { case (k, a) => col(k).as(a) }: _*), cond, "left_semi"))
     (segments.filter(touched.contains), segments.filterNot(touched.contains))
   }
 
@@ -1583,9 +1606,8 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
   def delete(spark: SparkSession, table: String, cond: Column): Snapshot =
     commitTransform(spark, table) { (base, cur) =>
       val hit = coalesce(cond, lit(false))
-      val touched = readSegments(spark, table, base.segments)
-        .filter(hit).select(segmentExpr.as("__graft_seg"))
-        .distinct().collect().map(_.getString(0)).toSet
+      val touched = segmentsOf(readSegments(spark, table, base.segments)
+        .filter(hit).select(col("_metadata.file_path").as(PathCol)))
       val kept = base.segments.filterNot(touched.contains)
       if (touched.isEmpty) ("delete", None, kept)
       else {
@@ -1671,10 +1693,8 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
     val touched: Set[String] =
       if (partial.isEmpty) Set.empty
       else {
-        val pdf = readSegments(spark, table, partial, base.dvs,
-          segmentCol = Some("__graft_seg"))
-        pdf.filter(cond(pdf)).select(col("__graft_seg"))
-          .distinct().collect().map(_.getString(0)).toSet
+        val pdf = readSegments(spark, table, partial, base.dvs)
+        segmentsOf(pdf.filter(cond(pdf)).select(col("_metadata.file_path").as(PathCol)))
       }
     val kept = base.segments.filter(s =>
       disjoint(s) || (partial.contains(s) && !touched(s)))
@@ -1693,13 +1713,14 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
    * positional-delete discipline): instead of rewriting every touched
    * segment, record the (file, row) POSITIONS of the matching live rows
    * as a tiny parquet relation and reference it from the manifest; every
-   * snapshot read anti-joins the positions away. This is what a SCATTERED
-   * delete needs at 100 TB — a GDPR erasure touching one row in each of
-   * 10k segments costs ONE discovery scan plus a positions write measured
-   * in deleted rows, where copy-on-write would rewrite 10k segments. The
-   * trade is a per-read anti-join until a compaction/optimize/rewrite
-   * MATERIALIZES the tombstones (any rewrite reads dv-applied rows, so
-   * its output segment is clean and [[carryDvs]] drops the entry).
+   * snapshot read filters the positions out of its scan ([[readSegments]]).
+   * This is what a SCATTERED delete needs at 100 TB — a GDPR erasure
+   * touching one row in each of 10k segments costs ONE discovery scan plus
+   * a positions write measured in deleted rows, where copy-on-write would
+   * rewrite 10k segments. The trade is a per-read position filter until a
+   * compaction/optimize/rewrite MATERIALIZES the tombstones (any rewrite
+   * reads dv-applied rows, so its output segment is clean and
+   * [[carryDvs]] drops the entry).
    *
    * Already-dead rows are excluded from the new vector (positions are
    * live-at-parent by construction), so [[changeFeed]] emits each row's
@@ -1711,11 +1732,11 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
       maxRetries: Int = 20): Snapshot = {
     val hit = coalesce(cond, lit(false))
     commitDv(spark, table, maxRetries) { base =>
-      val (f, r) = filePosCols
       // positions of LIVE matching rows (dv-applied read: rows a prior dv
       // already killed never re-enter a vector)
-      readSegments(spark, table, base.segments, base.dvs)
-        .filter(hit).select(f.as("file"), r.as("row"))
+      readSegments(spark, table, base.segments, base.dvs).filter(hit)
+        .select(fileKey(col("_metadata.file_path")).as("file"),
+          col("_metadata.row_index").as("row"))
     }
   }
 
@@ -1733,11 +1754,11 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
       val dvDir = s"data/dv-${java.util.UUID.randomUUID().toString.take(13)}"
       segmentWriter(fresh).parquet(s"${dataRoot(table)}/$dvDir")
       // per-segment dead-row counts ride the manifest (what lets
-      // [[fastCount]] stay exact under merge-on-read deletes)
-      val perSeg = readSegmentDirs(spark, Seq(s"${dataRoot(table)}/$dvDir"))
-        .groupBy(regexp_extract(col("file"), "^(data/[^/]+)/", 1).as("s"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      // [[fastCount]] stay exact under merge-on-read deletes), counted
+      // from the positions the readers will load — no re-read job
+      val perSeg = dvPositions(spark, table, Seq(dvDir)).toSeq
+        .groupMapReduce { case (f, _) => DeletionVectors.segmentOfKey(f) }(
+          _._2.length.toLong)(_ + _)
       if (perSeg.isEmpty) { dropSegment(table, dvDir); return base }
       val snap = TxSnapshot(base.version + 1, s"delete_dv:segs=${perSeg.size}",
         base.segments, clock(), base.stats, base.strStats,
@@ -1765,11 +1786,12 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
     val keySide = keys.select(renamed.map { case (k, a) => col(k).as(a) }: _*).distinct()
     val cond = renamed.map { case (k, a) => col(k) <=> col(a) }.reduce(_ && _)
     commitDv(spark, table, maxRetries) { base =>
-      val (f, r) = filePosCols
+      // the raw path rides the semi-join; only matched rows parse it
       readSegments(spark, table, base.segments, base.dvs)
-        .withColumn("__graft_dvf2", f).withColumn("__graft_dvr2", r)
+        .withColumn(PathCol, col("_metadata.file_path"))
+        .withColumn("__graft_row", col("_metadata.row_index"))
         .join(keySide, cond, "left_semi")
-        .select(col("__graft_dvf2").as("file"), col("__graft_dvr2").as("row"))
+        .select(fileKey(col(PathCol)).as("file"), col("__graft_row").as("row"))
     }
   }
 
@@ -1871,7 +1893,7 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
    * segments that carry dv entries (each read dv-applied), carry every
    * clean segment forward verbatim, and drop the vectors — the targeted
    * middle ground between serving under vectors forever (per-read
-   * anti-join) and a full [[compact]] (whole-table rewrite). Cost tracks
+   * position filter) and a full [[compact]] (whole-table rewrite). Cost tracks
    * the DIRTY volume; a table with vectors on 3 of 10k segments rewrites
    * 3. Row-preserving: the change feed emits nothing for this version,
    * and the manifest drops back to protocol 1.
@@ -2095,25 +2117,19 @@ class TxLogOps(store0: LogStore, val checkpointInterval: Int = 10,
 
   /** The rows a DELETION-VECTOR commit killed: the version's NEW dv dirs
     * hold exactly the positions that were live at the parent (deleteRows
-    * builds them from a dv-applied read), so a positional SEMI-join of
-    * the affected segments against those positions returns each deleted
-    * row's content exactly once — touched-volume-sized (only affected
-    * segments are scanned, only the new vectors are read). */
+    * builds them from a dv-applied read), so keeping the affected
+    * segments' rows that those positions list — the read's position
+    * filter with its polarity flipped — returns each deleted row's content
+    * exactly once, touched-volume-sized (only affected segments are
+    * scanned, only the new vectors are loaded). */
   private def dvDeletedRows(spark: SparkSession, table: String, v: Long): Option[DataFrame] = {
     val cur = snapshotOf(table, v)
     val prev = snapshotOf(table, v - 1)
     val newDvs = (cur.dvs.keySet -- prev.dvs.keySet).toSeq.sorted
     if (newDvs.isEmpty) return None
     val affected = newDvs.flatMap(d => cur.dvs(d).keys).distinct.sorted
-    val (f, r) = filePosCols
-    val rows = readSegments(spark, table, affected, prev.dvs)
-      .withColumn("__graft_dvf", f).withColumn("__graft_dvr", r)
-    val dv = readSegmentDirs(spark, newDvs.map(d => s"${dataRoot(table)}/$d"))
-      .select(col("file").as("__dv_f"), col("row").as("__dv_r"))
-    Some(rows.join(dv,
-        col("__graft_dvf") === col("__dv_f") && col("__graft_dvr") === col("__dv_r"),
-        "left_semi")
-      .drop("__graft_dvf", "__graft_dvr"))
+    Some(readSegments(spark, table, affected, prev.dvs)
+      .filter(deadRows(spark, dvPositions(spark, table, newDvs))))
   }
 
   /** The CDF rows of one REWRITE version, computed from the MANIFEST DIFF:
@@ -3127,6 +3143,77 @@ private[io] object SegmentStats extends Serializable {
       }
     }
     Partial(acc.toMap, accS.toMap, rows)
+  }
+}
+
+/** Deletion-vector positions on the driver — a top-level object so the
+  * per-row filter ([[DeadRows]]) captures no [[TxLogOps]] instance. A dv
+  * dir is a parquet relation of (`file` = `data/<seg>/<file>`, `row` =
+  * `_metadata.row_index`) rows. */
+private[io] object DeletionVectors {
+  /** The file key of a data file path: its last three components when
+    * the first of them is `data` (segments lay files exactly one level
+    * under `data/<uuid>`), "" otherwise. The SQL and driver forms share
+    * the pattern, so the keys a dv stores and the keys a read looks up
+    * are equal by construction. */
+  val FileKeyPattern = "/(data/[^/]+/[^/]+)$"
+  private val FileKeyRe = java.util.regex.Pattern.compile(FileKeyPattern)
+
+  def fileKeyOf(path: String): String = {
+    val m = FileKeyRe.matcher(path)
+    if (m.find()) m.group(1) else ""
+  }
+
+  /** `data/<seg>` of a file key ("" for ""). */
+  def segmentOfKey(key: String): String = key.substring(0, math.max(0, key.lastIndexOf('/')))
+
+  /** Per-file sorted positions of the dv dirs (absolute paths), read on
+    * the driver through the Hadoop FileSystem and parquet's record reader
+    * — no Spark job. Tombstone-sized by construction. */
+  def load(conf: org.apache.hadoop.conf.Configuration,
+      dirs: Seq[String]): Map[String, Array[Long]] = {
+    val acc = scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuilder.ofLong]()
+    dirs.foreach { d =>
+      val dir = new org.apache.hadoop.fs.Path(d)
+      dir.getFileSystem(conf).listStatus(dir)
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .foreach { st =>
+          val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+            new org.apache.parquet.hadoop.example.GroupReadSupport(), st.getPath)
+            .withConf(conf).build()
+          try {
+            var g = reader.read()
+            while (g != null) {
+              acc.getOrElseUpdate(g.getString("file", 0),
+                new scala.collection.mutable.ArrayBuilder.ofLong) += g.getLong("row", 0)
+              g = reader.read()
+            }
+          } finally reader.close()
+        }
+    }
+    acc.iterator.map { case (f, b) =>
+      val rows = b.result()
+      java.util.Arrays.sort(rows)
+      f -> rows
+    }.toMap
+  }
+}
+
+/** `dead(_metadata.file_path, _metadata.row_index)`: whether a scanned
+  * row is listed in the broadcast positions. Rows arrive file by file, so
+  * the file key parses once per file (the last file's array is kept),
+  * and each row costs one binary search. */
+private[io] final class DeadRows(positions: org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]])
+    extends ((String, Long) => Boolean) with Serializable {
+  @transient private var last: (String, Array[Long]) = _
+
+  def apply(path: String, row: Long): Boolean = {
+    var l = last
+    if (l == null || l._1 != path) {
+      l = (path, positions.value.getOrElse(DeletionVectors.fileKeyOf(path), Array.emptyLongArray))
+      last = l
+    }
+    java.util.Arrays.binarySearch(l._2, row) >= 0
   }
 }
 

@@ -32,7 +32,7 @@ import graft.io.TxLog
  *
  * Implemented against the classic `Source` API deliberately: `getBatch`
  * returns a full Catalyst DataFrame, so the change-feed read keeps its
- * plan (column pruning, row-group skipping, dv anti-joins) instead of
+ * plan (column pruning, row-group skipping, dv position filters) instead of
  * funneling through a row-level reader. Rate limiting
  * (`maxVersionsPerTrigger`) follows the FileStreamSource discipline — the
  * largest version handed out persists under the stream's own metadata

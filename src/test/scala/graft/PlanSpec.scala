@@ -489,34 +489,38 @@ class PlanSpec extends SparkSpec {
       s"CDF feed must scan the rewritten segment $segB\n" + plan)
   }
 
-  test("TxLog deletion vectors: dv-less reads plan NO join; a dv read is one anti-join") {
+  test("TxLog deletion vectors: no read plans a join; a dv read is one row_index filter") {
     import spark.implicits._
     import graft.io.TxLog
     val tbl = graft.io.TempDirs.create("plan_dv_").resolve("t").toString
     TxLog.create(spark, tbl, spark.range(0, 1000).selectExpr("id AS k", "id AS v"))
+    def nJoins(plan: String) =
+      "(?m)^\\(\\d+\\) [A-Za-z]*Join".r.findAllIn(plan).size
+    // Filter nodes whose condition reads the scan's physical row index
+    def nDvFilters(plan: String) =
+      "(?m)^Condition : .*row_index".r.findAllIn(plan).size
     // clean table: the read is a bare scan — merge-on-read costs nothing
     // until a vector exists
     val clean = formatted(TxLog.read(spark, tbl))
-    assert(!clean.contains("Join"), s"dv-less read must plan no join\n$clean")
+    assert(nJoins(clean) == 0 && nDvFilters(clean) == 0 && !clean.contains("_metadata"),
+      s"dv-less read must plan a bare scan\n$clean")
     TxLog.deleteRows(spark, tbl, col("k") % 100 === 7)
-    // dv table: exactly ONE anti-join applies the tombstones; the
-    // positions side is tiny and broadcastable
+    // dv table: no join; exactly ONE filter applies the tombstones by
+    // (file, row index)
     val dv = formatted(TxLog.read(spark, tbl))
-    def nJoins(plan: String) =
-      "(?m)^\\(\\d+\\) [A-Za-z]*Join".r.findAllIn(plan).size
-    assert(nJoins(dv) == 1 && dv.contains("LeftAnti"),
-      s"expected one anti join\n$dv")
-    // a partial range read of a dv table keeps its single anti-join and
-    // the pushed range predicate on the scan
+    assert(nJoins(dv) == 0 && nDvFilters(dv) == 1, s"expected one dv filter, no join\n$dv")
+    // a partial range read of a dv table keeps its single filter and the
+    // pushed range predicate on the scan
     val rw = formatted(TxLog.readWhere(spark, tbl, "k", 10.0, 20.0))
-    assert(nJoins(rw) == 1 && rw.contains("LeftAnti"), rw)
+    assert(nJoins(rw) == 0 && nDvFilters(rw) == 1, rw)
     assert(rw.contains("PushedFilters") &&
       (rw.contains("GreaterThanOrEqual(k,10)") || rw.contains("GreaterThanOrEqual")),
       s"range must push to the scan\n$rw")
-    // after materialization the join is gone again
+    // after materialization the filter is gone again
     TxLog.materializeVectors(spark, tbl)
     val mat = formatted(TxLog.read(spark, tbl))
-    assert(!mat.contains("Join"), s"materialized read must plan no join\n$mat")
+    assert(nJoins(mat) == 0 && nDvFilters(mat) == 0 && !mat.contains("_metadata"),
+      s"materialized read must plan a bare scan\n$mat")
   }
 
 }

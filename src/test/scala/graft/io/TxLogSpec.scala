@@ -1,7 +1,12 @@
 package graft.io
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** TxLog: versioned snapshots compose the upsert/CDC/diff/compaction
   * family without lost updates — including under genuinely concurrent
@@ -1427,5 +1432,182 @@ class TxLogSpec extends SparkSpec {
     // no LIVE row matches: zero rewrites, tier split records it (ADVICE r9)
     assert(snap.op.contains("rewritten=0"), s"got op ${snap.op}")
     assert(TxLog.read(spark, tbl).count() === 17)
+  }
+
+  /** A snapshot's rows by the regexp + anti-join formula for deletion
+    * vectors, built from the manifest alone — the independent reference
+    * the position-filter read must equal. Keeps each row's file key and
+    * row index as `__f` / `__r`. */
+  private def antiJoinPositioned(root: String, snap: TxSnapshot): DataFrame = {
+    val base = spark.read.option("mergeSchema", "true")
+      .parquet(snap.segments.map(s => s"$root/$s"): _*)
+      .withColumn("__f", regexp_extract(col("_metadata.file_path"), "/(data/[^/]+/[^/]+)$", 1))
+      .withColumn("__r", col("_metadata.row_index"))
+    if (snap.dvs.isEmpty) base
+    else base.join(
+      spark.read.parquet(snap.dvs.keys.toSeq.map(d => s"$root/$d"): _*)
+        .select(col("file").as("__dv_f"), col("row").as("__dv_r")),
+      col("__f") === col("__dv_f") && col("__r") === col("__dv_r"), "left_anti")
+  }
+
+  private def antiJoinRead(root: String, snap: TxSnapshot): DataFrame =
+    antiJoinPositioned(root, snap).drop("__f", "__r")
+
+  /** Multiset-exact row comparison. */
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val (g, w) = (rows(got), rows(want))
+    assert(g == w, s"$what: ${g.diff(w).take(5)} extra, ${w.diff(g).take(5)} missing")
+  }
+
+  test("dv position filter equals the anti-join reference, multiset-exact, split files") {
+    val tbl = freshTable()
+    val prevSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
+    try {
+      // several row groups per file and every file split across tasks, so
+      // row indexes come from row groups that different tasks read
+      spark.conf.set("parquet.block.size", "2048")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+      def rows(lo: Long) = spark.range(lo, lo + 3000, 1, 2)
+        .selectExpr("id AS k", "id * 3 AS v", "concat('s', id) AS s")
+      TxLog.create(spark, tbl, rows(0))                                     // v0
+      TxLog.append(spark, tbl, rows(3000))                                  // v1
+      TxLog.append(spark, tbl, rows(6000))                                  // v2
+      val preDv = TxLog.latest(tbl)
+      TxLog.deleteRows(spark, tbl, col("k") % 7 === 3)                       // v3
+      TxLog.deleteRowsKeyed(spark, tbl,
+        spark.range(0, 9000).filter(col("id") % 11 === 5).toDF("k"), Seq("k")) // v4
+      TxLog.deleteRows(spark, tbl, col("k") % 13 === 0 && col("k") > 1000)   // v5
+      val snap = TxLog.latest(tbl)
+      assert(snap.version === 5L && snap.dvs.size === 3 &&
+        snap.dvs.values.forall(_.size === 3), snap.dvs)
+      val files = snap.segments.flatMap(sg =>
+        new java.io.File(tbl, sg).listFiles().filter(_.getName.endsWith(".parquet")))
+      assert(TxLog.read(spark, tbl).rdd.getNumPartitions > files.size,
+        "files must split across tasks")
+
+      assertSameRows(TxLog.read(spark, tbl), antiJoinRead(tbl, snap), "read")
+      assertSameRows(TxLog.readWhere(spark, tbl, "k", 1000.0, 7500.0),
+        antiJoinRead(tbl, snap).filter(col("k").between(1000L, 7500L)), "readWhere")
+      val hist = TxLog.history(tbl)
+      assertSameRows(TxLog.read(spark, tbl, preDv.version), antiJoinRead(tbl, preDv),
+        "time travel to the pre-dv version")
+      assertSameRows(TxLog.read(spark, tbl, 4L), antiJoinRead(tbl, hist(4)),
+        "time travel between vectors")
+
+      TxLog.createBranch(spark, tbl, "b")
+      TxLog.deleteRows(spark, s"$tbl#b", col("k") % 17 === 1)
+      val branch = TxLog.latest(s"$tbl#b")
+      assert(branch.dvs.size === 4)
+      assertSameRows(TxLog.read(spark, s"$tbl#b"), antiJoinRead(tbl, branch), "branch read")
+
+      val wantFeed = (3 to 5).map { v =>
+        antiJoinRead(tbl, hist(v - 1)).exceptAll(antiJoinRead(tbl, hist(v)))
+          .withColumn("_change_type", lit("delete"))
+          .withColumn("_commit_version", lit(v.toLong))
+      }.reduce(_.unionByName(_))
+      assertSameRows(TxLog.changeFeed(spark, tbl, preDv.version), wantFeed,
+        "changeFeed over the dv versions")
+
+      // keyed erasure of keys every vector already killed commits nothing
+      val n0 = TxLog.history(tbl).length
+      TxLog.deleteRowsKeyed(spark, tbl, Seq(3L, 10L, 5L, 16L, 1014L).toDF("k"), Seq("k"))
+      assert(TxLog.history(tbl).length === n0, "already-dead keys must commit nothing")
+      // dead and live keys mixed: the new vector holds exactly the live
+      // victims' positions
+      val victims = Seq(3L, 5L, 1014L, 1L, 2L, 8999L).toDF("k")
+      val wantPos = antiJoinPositioned(tbl, snap).join(victims, Seq("k"), "left_semi")
+        .select(col("__f").as("file"), col("__r").as("row"))
+      val d = TxLog.deleteRowsKeyed(spark, tbl, victims, Seq("k"))
+      val fresh = (d.dvs.keySet -- snap.dvs.keySet).toSeq
+      assert(fresh.size === 1 && d.dvs(fresh.head).values.sum === 3L, d.dvs)
+      assertSameRows(spark.read.parquet(s"$tbl/${fresh.head}"), wantPos,
+        "keyed delete positions")
+      assertSameRows(TxLog.read(spark, tbl), antiJoinRead(tbl, d), "read after the keyed delete")
+    } finally {
+      spark.conf.unset("parquet.block.size")
+      prevSplit.fold(spark.conf.unset("spark.sql.files.maxPartitionBytes"))(
+        spark.conf.set("spark.sql.files.maxPartitionBytes", _))
+    }
+  }
+
+  /** Spark jobs `body` starts on this thread. A marker job run after it
+    * fences the asynchronous listener bus: once the marker's start is
+    * seen, every earlier job start has been delivered. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (probe, marker) = ("graft-probe-" + java.util.UUID.randomUUID(),
+      "graft-marker-" + java.util.UUID.randomUUID())
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+        ()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(probe, "jobs started by the probed body")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(groups.contains(marker), "the listener never saw the marker job")
+      groups.asScala.count(_ == probe)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("nullability-only schema differences read with zero jobs; added columns merge") {
+    val tbl = freshTable()
+    val schema = StructType(Seq(StructField("k", LongType, nullable = false),
+      StructField("v", LongType)))
+    def batch(lo: Long) = spark.createDataFrame(spark.sparkContext.parallelize(
+      (lo until lo + 50).map(i => Row(i, i * 10)), 2), schema)
+    TxLog.create(spark, tbl, batch(0))
+    TxLog.append(spark, tbl, batch(50))
+    TxLog.upsert(spark, tbl, Seq((5L, -5L)).toDF("k", "v"), Seq("k"))
+    // the appended segment's footer says REQUIRED, the rewrite's OPTIONAL
+    val conf = spark.sessionState.newHadoopConf()
+    val kinds = TxLog.latest(tbl).segments.map { sg =>
+      val f = new java.io.File(tbl, sg).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf,
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath)).getFileMetaData.getSchema
+      footer.getType(footer.getFieldIndex("k")).getRepetition.toString
+    }
+    assert(kinds.toSet === Set("REQUIRED", "OPTIONAL"), kinds)
+    val nullable = StructType(Seq(StructField("k", LongType), StructField("v", LongType)))
+    var df: DataFrame = null
+    assert(jobsStartedBy { df = TxLog.read(spark, tbl) } === 0)
+    assert(df.schema === nullable)
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ===
+      (0L until 100L).map(i => (i, if (i == 5L) -5L else i * 10)))
+    // with a deletion vector the read still builds without a job
+    TxLog.deleteRows(spark, tbl, col("k") % 10 === 1)
+    assert(jobsStartedBy { df = TxLog.read(spark, tbl) } === 0)
+    assert(df.schema === nullable && df.count() === 90L)
+
+    // a REAL schema difference still reads merged: old rows surface NULL
+    val t2 = freshTable()
+    TxLog.create(spark, t2, Seq((1L, 10L)).toDF("k", "v"))
+    TxLog.append(spark, t2, Seq((2L, 20L, "x")).toDF("k", "v", "extra"))
+    val merged = TxLog.read(spark, t2)
+    assert(merged.columns.toSeq === Seq("k", "v", "extra"))
+    assert(merged.collect().map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2))))
+      .sortBy(_._1).toSeq === Seq((1L, 10L, None), (2L, 20L, Some("x"))))
+  }
+
+  test("PosixLogStore claim: a failing link throws and leaves no temp file behind") {
+    val tbl = freshTable()
+    val log = new java.io.File(tbl, "_graft_log")
+    intercept[java.io.IOException](
+      PosixLogStore.putIfAbsent(tbl, "no_such_dir/00000000.commit", "x"))
+    assert(log.isDirectory && log.list().isEmpty, log.list().mkString(", "))
+    // a won claim and a lost race leave none either
+    assert(PosixLogStore.putIfAbsent(tbl, "a.commit", "1"))
+    assert(!PosixLogStore.putIfAbsent(tbl, "a.commit", "2"))
+    assert(log.list().toSeq === Seq("a.commit"))
+    assert(PosixLogStore.read(tbl, "a.commit") === "1")
   }
 }
